@@ -60,12 +60,14 @@ def set_up_environment(work: str) -> dict[str, str]:
     os.environ["PYSPARK_PYTHON"] = sys.executable
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
+    # the JVMs' perf-data files live in /tmp whatever java.io.tmpdir says
+    os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     return {
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": local,
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.driver.extraJavaOptions": (
-            f"-Djava.io.tmpdir={tmp} -Dderby.system.home={work}/derby"
+            f"-Djava.io.tmpdir={tmp} -Dderby.system.home={work}/derby -XX:-UsePerfData"
         ),
     }
 
