@@ -6,8 +6,8 @@ Run from the repository root.  One closed-loop client: this process
 generates the workload's input from the seed, starts the engine's
 Spark session (``session.get_spark`` at ``local[nproc]``), runs one
 untimed warm-up pass over the workload's ops -- checking every op's
-output -- and then measures whole passes, at least the workload's
-minimum and until ``--seconds`` have passed.  ``--trace 1`` then runs
+output -- and then measures whole passes, at least one and until
+``--seconds`` have passed.  ``--trace 1`` then runs
 as many passes again with spans and Spark counters recorded, and as
 many untraced after them for the tracing overhead.
 
@@ -33,11 +33,26 @@ import subprocess
 import sys
 import time
 import traceback
+from collections import Counter
 
 T_START = time.perf_counter()
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-DRIVER_MEM = "2g"
+
+
+def cpu_probe_s(reps: int = 5) -> float:
+    """Median time of a fixed single-threaded Python loop.  Taken before
+    the session starts and after it stops, it tells whether two sets of
+    runs saw the same machine speed: a set taken on a slower or busier
+    machine shows a larger probe, not only larger metrics."""
+    times = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        x = 0
+        for i in range(1_000_000):
+            x = (x * 31 + i) & 0xFFFF
+        times.append(time.perf_counter() - t0)
+    return statistics.median(times)
 
 
 def rss_hwm_mb(pid: int | str = "self") -> float:
@@ -59,7 +74,6 @@ def set_up_environment(work: str) -> dict[str, str]:
     os.environ["SPARK_LOCAL_DIRS"] = local
     os.environ["PYSPARK_PYTHON"] = sys.executable
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     # the JVMs' perf-data files live in /tmp whatever java.io.tmpdir says
     os.environ["SPARK_LAUNCHER_OPTS"] = "-XX:-UsePerfData"
     return {
@@ -81,31 +95,48 @@ def tail_percentile(samples: list[float]) -> tuple[float, int]:
 
 
 class Runner:
-    """Runs a workload's ops and keeps the count of attempts and
-    failures; an op that raises or fails its check is a failure of
-    that op, never of the run."""
+    """Runs a workload's ops and counts their executions and failed
+    executions.  An execution fails if it raises, or if its op's output
+    failed a check: an op that answers wrong is wrong on every pass, not
+    only on the checked one.  A failure is the op's, never the run's."""
 
     def __init__(self, workload, ctx, fail_op: str | None):
         self.workload = workload
         self.ctx = ctx
         self.fail_op = fail_op
-        self.attempted = 0
+        self.runs: Counter[str] = Counter()
+        self.raised: Counter[str] = Counter()
+        self.wrong: set[str] = set()
         self.failures: list[dict] = []
         self.warmup_op_s: dict[str, float] = {}
 
+    @property
+    def attempted(self) -> int:
+        return sum(self.runs.values())
+
+    @property
+    def failed(self) -> int:
+        return sum(n if op in self.wrong else self.raised[op] for op, n in self.runs.items())
+
     def _run(self, op, warm: bool):
+        self.runs[op.name] += 1
         if op.name == self.fail_op:
             raise RuntimeError(f"failure injected into {op.name}")
         return op.run(self.ctx, warm)
 
     def fail(self, op: str, phase: str, msg: str) -> None:
+        """Record a failure; ``phase`` "check" or "output" means a wrong
+        output, any other an execution that raised."""
         self.failures.append({"op": op, "phase": phase, "error": msg[-500:]})
+        if phase in ("check", "output"):
+            self.wrong.add(op)
+        else:
+            self.raised[op] += 1
 
     def warmup(self) -> float:
         """One pass that checks every op; returns its time without the
         checks."""
         for op in self.workload.ops:
-            self.attempted += 1
             t0 = time.perf_counter()
             try:
                 result = self._run(op, warm=True)
@@ -135,7 +166,6 @@ class Runner:
             t_pass = time.perf_counter()
             with tracer.span("workload", workload=self.workload.name, pass_no=len(walls)):
                 for op in self.workload.ops:
-                    self.attempted += 1
                     t0 = time.perf_counter()
                     try:
                         with tracer.span("op", op=op.name, layer=op.layer):
@@ -279,6 +309,8 @@ def run(args, work: str) -> int:
         clock[0] = now
 
     lap("import")
+    probe_start = cpu_probe_s()
+    lap("cpu_probe")
     input_dir, input_size = wl.prepare(work, args.seed, args.tiny)
     lap("prepare")
     # the checks' reference answers depend on the input alone: compute
@@ -304,13 +336,12 @@ def run(args, work: str) -> int:
         lap("facts")
         warmup_s = runner.warmup()
         lap("warmup_and_checks")
-        walls, lat = runner.passes(wl.min_passes, args.seconds, "measure")
+        walls, lat = runner.passes(1, args.seconds, "measure")
         lap("measure")
 
         written = {}
         if wl.output_checks:
             for op, msg in wl.output_checks(ctx).items():
-                runner.attempted += 1
                 if msg:
                     runner.fail(op, "output", msg)
             written = wl.written(ctx)
@@ -339,6 +370,7 @@ def run(args, work: str) -> int:
             "pyspark": pyspark.__version__,
             "java": sc._jvm.System.getProperty("java.version"),
             "python": platform.python_version(),
+            "driver_memory": sc.getConf().get("spark.driver.memory"),
         }
     finally:
         if spark is not None:
@@ -347,7 +379,7 @@ def run(args, work: str) -> int:
 
     samples = [x for v in lat.values() for x in v]
     tail, tail_pct = tail_percentile(samples) if samples else (0.0, 0)
-    failed = len(runner.failures)
+    failed = runner.failed
     metrics = {
         "wall_s": (statistics.median(walls), "s"),
         "op_p50_s": (statistics.median(samples) if samples else 0.0, "s"),
@@ -367,6 +399,7 @@ def run(args, work: str) -> int:
         "input": input_size,
         "passes": len(walls),
         "pass_wall_s": walls,
+        "op_runs": dict(runner.runs),
         "op_samples": len(samples),
         "op_tail_percentile": tail_pct,
         "op_median_s": {k: statistics.median(v) for k, v in lat.items() if v},
@@ -378,8 +411,9 @@ def run(args, work: str) -> int:
             "nproc": cores,
             "loadavg_start": load_start,
             "loadavg_end": os.getloadavg(),
+            "cpu_probe_s_start": probe_start,
+            "cpu_probe_s_end": cpu_probe_s(),
             "spark_master": f"local[{cores}]",
-            "driver_memory": DRIVER_MEM,
             **versions,
         },
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},

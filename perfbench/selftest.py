@@ -2,19 +2,24 @@
 
     python3 perfbench/selftest.py
 
-Runs every workload twice on a tiny input: once untraced with one op
-forced to fail, once traced.  Checks that each run prints every metric
+Checks with a fake workload that an op whose output fails its check
+counts as failed on every execution.  Then runs every workload twice
+on a tiny input: once untraced with one op forced to fail, once
+traced.  Checks that each run prints every metric
 BENCHMARK.json names, with its unit, and that the forced failure shows
-in ``failed``, ``correct`` and ``error_rate`` instead of vanishing.
+in ``failed``, ``correct`` and ``error_rate`` instead of vanishing: every
+execution of the failing op, warm-up and measured, counts as failed.
 Exits non-zero on the first mismatch.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import subprocess
 import sys
+from types import SimpleNamespace
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -53,7 +58,28 @@ def check_metrics(got: dict, want: dict[str, str], what: str) -> None:
                f"{what}: {name} is a number in {unit}")
 
 
+def check_wrong_output_counted() -> None:
+    """An op whose output fails its check counts as failed on every
+    execution, the unchecked measured ones too (no Spark needed)."""
+    sys.path.insert(0, HERE)
+    from run import Runner
+
+    def op(name, answer):
+        return SimpleNamespace(name=name, layer="test", run=lambda ctx, warm: answer,
+                               check=lambda ctx, got: None if got == 1 else f"got {got}")
+
+    tracer = SimpleNamespace(span=lambda *a, **k: contextlib.nullcontext())
+    runner = Runner(SimpleNamespace(name="test", ops=(op("right", 1), op("wrong", 2))),
+                    SimpleNamespace(tracer=tracer), fail_op=None)
+    runner.warmup()
+    runner.passes(3, 0, "measure")
+    expect(runner.attempted == 8 and runner.failed == 4,
+           f"a wrong op fails all 4 of its executions: failed {runner.failed} of "
+           f"{runner.attempted}")
+
+
 def main() -> int:
+    check_wrong_output_counted()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     end_to_end = {m["name"]: m["unit"] for m in bench["end_to_end"]}
@@ -68,8 +94,13 @@ def main() -> int:
         expect(all(report["metrics"][k]["unit"] == u for k, u in want.items()),
                f"{name}: report carries {sorted(want)} with units")
         failed_ops = {f["op"] for f in report["failures"]}
-        expect(result["failed"] >= 1 and not result["correct"] and failed_ops == {FAIL_OP[name]},
-               f"{name}: the forced failure of {FAIL_OP[name]} is counted and named")
+        expect(not result["correct"] and failed_ops == {FAIL_OP[name]},
+               f"{name}: the forced failure of {FAIL_OP[name]} is named")
+        runs = report["op_runs"]
+        expect(result["failed"] == runs[FAIL_OP[name]] >= 2
+               and result["attempted"] == sum(runs.values()),
+               f"{name}: every one of the {runs[FAIL_OP[name]]} executions of "
+               f"{FAIL_OP[name]} counts as failed")
         rate = report["metrics"]["error_rate"]["value"]
         expect(rate > 0 and abs(rate - result["failed"] / result["attempted"]) < 1e-12,
                f"{name}: error_rate {rate:.3f} = failed / attempted")

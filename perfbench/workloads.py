@@ -12,7 +12,6 @@ Import this module only after the environment for Spark is set up
 
 from __future__ import annotations
 
-import math
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -25,6 +24,7 @@ import gen
 from tmp_parquet_merge_spark.queries import REGISTRY
 from tmp_parquet_merge_spark.registry import TABLES
 from tmp_parquet_merge_spark.sources import parquet_io as pio
+from tools.check_oracle import norm_rows
 
 
 @dataclass(frozen=True)
@@ -47,31 +47,6 @@ class Ctx:
 
 def noop(df) -> None:
     df.write.mode("overwrite").format("noop").save()
-
-
-# -- result normalization (the oracle-parity rules of tools/check_oracle) --
-
-
-def norm_cell(v) -> str:
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        s = f"{v:.10g}"
-        if "." not in s and "e" not in s and "inf" not in s:
-            s += ".0"
-        return s
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, list):
-        return "[" + ",".join(norm_cell(x) for x in v) + "]"
-    return str(v)
-
-
-def norm_rows(cols, rows) -> list[tuple]:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
 # ------------------------------- llm_curation -------------------------------
@@ -146,8 +121,8 @@ def llm_facts(input_dir: str, duck) -> dict:
 
 # -------------------------------- parquet_io --------------------------------
 
-IO_SF = 0.05  # generated lineitem base, 300k rows
-IO_FOLDS = 2  # replica: 600k rows, ~11 MB of Parquet
+IO_SF = 0.1  # generated lineitem base, 600k rows
+IO_FOLDS = 4  # replica: 2.4M rows, ~45 MB of Parquet
 ROW_GROUP_BYTES = 2 << 20
 SCATTER_ROWS = 20_000  # rows per file of the many-small-files write
 SMALL_FILE_BYTES = 1 << 20
@@ -367,7 +342,6 @@ class Workload:
     ops: tuple[Op, ...]
     prepare: Callable  # (work_dir, seed, tiny) -> (input_dir, {rows, bytes, files})
     facts: Callable  # (input_dir, duckdb connection) -> what the checks compare to
-    min_passes: int
     # checks of what the measured passes left on disk: (ctx) -> {op: error or None}
     output_checks: Callable | None = None
     written: Callable | None = None  # (ctx) -> {op: (files, bytes)} it wrote
@@ -383,7 +357,6 @@ WORKLOADS = {
         tuple(registry_op(n, layer) for n, layer in LLM_OPS),
         prepare_llm,
         llm_facts,
-        min_passes=1,
     ),
     "parquet_io": Workload(
         "parquet_io",
@@ -402,7 +375,6 @@ WORKLOADS = {
         ),
         prepare_io,
         io_facts,
-        min_passes=2,
         output_checks=io_output_checks,
         written=io_written,
     ),
