@@ -1,13 +1,12 @@
-"""Per-round benchmark harness (driver contract).
+"""Benchmark harness.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE compact JSON line as the final
-stdout line:
+Runs every registry query marked ``bench`` at $SPARK_GRAFT_SF_DIR
+(default sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE compact
+JSON line as the final stdout line:
   {"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
    "n_queries": N}
 Per-query timings go to stderr and ./bench_detail.json — never the
-stdout metric line, which must stay inside the driver's 2,000-char
-stdout tail (the embedded per-query dict truncated it in round 3).
+stdout metric line, which must stay inside a 2,000-char stdout tail.
 
 Engine analog of the reference's self-timing scan tool
 (cpp/tools/parquet/parquet-scan.cc:61-71): wall-clock around fully
@@ -30,278 +29,11 @@ from tmp_parquet_merge_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Headline set: every operator family, excluding the capped exact
-# verify-stage oracle twins (q_dedup_ngram / q_dedup_embedding /
-# q_dedup_cluster / q_contamination, whose pair source is the exact
-# shared-shingle or all-pairs join — correctness-gate fixtures); their
-# scalable LSH twins ARE benched.
-HEADLINE = [
-    "q_scan_count",
-    "q_scan_full",
-    "q_filter_pushdown",
-    "q_agg_basic",
-    "q_agg_distinct",
-    "q_agg_cube",
-    "q_percentiles",
-    "q_pivot",
-    "q_grouped_apply",
-    "q_udf_pandas",
-    "q_sql_tpch_q3",
-    "q_join_inner",
-    "q_join_multiway",
-    "q_join_asof",
-    "q_join_asof_tolerance",
-    "q_window_rank",
-    "q_window_running",
-    "q_topk_orders",
-    "q_window_tumbling",
-    "q_window_session",
-    "q_dedup_exact",
-    "q_dedup_minhash",
-    "q_dedup_simhash",
-    "q_dedup_segments",
-    "q_segments_clean",
-    "q_topk_similarity",
-    "q_ann_lsh",
-    "q_text_stats",
-    "q_lang_id",
-    "q_quality_score",
-    "q_token_count",
-    "q_doc_fingerprint",
-    "q_tfidf",
-    "q_split_assign",
-    "q_sort_global",
-    "q_window_lag",
-    "q_funnel",
-    "q_upsert",
-    "q_table_diff",
-    "q_stream_dedup",
-    "q_corpus_mix",
-    "q_sample_stratified",
-    "q_repetition",
-    "q_lang_id_eval",
-    "q_knn_classify",
-    "q_redact",
-    "q_histogram",
-    "q_profile",
-    "q_incremental_agg",
-    "q_resample_ffill",
-    # round-2 additions: scale-safe dedup graph + contamination, the
-    # forward as-of twin, skew salting, distribution windows, unpivot,
-    # Q6, LSH embedding dedup, k-means IVF
-    "q_dedup_cluster_lsh",
-    "q_contamination_lsh",
-    "q_join_asof_forward",
-    "q_salted_join",
-    "q_window_ntile",
-    "q_unpivot",
-    "q_sql_tpch_q6",
-    "q_dedup_embedding_lsh",
-    "q_ann_ivf",
-    "q_grouping_sets",
-    "q_agg_argmax",
-    "q_window_range_frame",
-    # round-3 additions: the 100 TB sketch twin of
-    # q_percentiles/q_agg_distinct (bounded-memory mergeable state vs
-    # per-group sort/distinct — measured side by side with its exact
-    # twins), the stateful-operator batch replay, and the k-means fit
-    "q_agg_sketch",
-    "q_stateful_profile",
-    "q_kmeans",
-    "q_dedup_prefix",
-    "q_entropy",
-    "q_ngram_freq",
-    "q_pack_sequences",
-    "q_orc_roundtrip",
-    "q_media_metadata",
-    # round-3 wave 2: chunking, vocab build, weighted sampling,
-    # winsorize, grouped top-k, the 6-table TPC-H join
-    "q_chunk_docs",
-    "q_vocab",
-    "q_sample_weighted",
-    "q_winsorize",
-    "q_window_topk",
-    "q_sql_tpch_q5",
-    "q_sql_exists",
-    "q_scalar_map",
-    "q_attribution",
-    # round-3 wave 3: BM25 retrieval, corpus interleave, embedding
-    # norms, returned-item + large-volume TPC-H, z-score anomaly flag,
-    # SCD2 interval build, binaryFile ingestion
-    "q_bm25",
-    "q_rank_fusion",
-    "q_interleave_sources",
-    "q_vector_norm",
-    "q_sql_tpch_q10",
-    "q_sql_tpch_q18",
-    "q_anomaly_zscore",
-    "q_scd2_build",
-    "q_binary_ingest",
-    "q_retention_cohort",
-    "q_copurchase",
-    "q_hll_rollup",
-    # physical-layout family: these WRITE a layout inside build() (an
-    # eager partitioned/sorted/bucketed write), then the measured plan
-    # reads it back — reported as two entries, <name>__write / <name>
-    "q_partition_pruning",
-    "q_dpp_join",
-    "q_zorder_layout",
-    "q_bucketed_join",
-    # round-3 wave 4: the widened TPC-H family (wide agg, EXISTS
-    # decorrelation, two-role dims, market share, distribution, promo
-    # ratio, disjunctive join, anti+scalar-subquery), time-series
-    # smoothing/sessionization, PMI collocations, PageRank, PQ ANN
-    "q_sql_tpch_q1",
-    "q_sql_tpch_q4",
-    "q_sql_tpch_q7",
-    "q_sql_tpch_q8",
-    "q_sql_tpch_q13",
-    "q_sql_tpch_q14",
-    "q_sql_tpch_q19",
-    "q_sql_tpch_q22",
-    "q_ewma",
-    "q_sessionize",
-    "q_collocations",
-    "q_pagerank",
-    "q_ann_pq",
-    "q_dedup_containment",
-    "q_sample_reservoir",
-    "q_gapfill",
-    "q_props_parse",
-    "q_quantile_norm",
-    "q_dedup_semantic",
-    "q_cdc_apply",
-    "q_novelty",
-    "q_media_dedup",
-    "q_time_weighted_avg",
-    "q_transition_matrix",
-    "q_triangle_count",
-    "q_bpe_merge",
-    "q_bpe_train",
-    "q_bpe_apply",
-    # round-3 wave 5: the TPC-H completion set (correlated MIN, profit
-    # rollup, global-threshold HAVING, priority classes, scalar-MAX
-    # view, distinct-agg + NOT IN, per-part avg threshold, nested
-    # semi-HAVING, double-EXISTS waiters), unigram-LM scoring, MAD
-    # anomaly flags
-    "q_sql_tpch_q2",
-    "q_sql_tpch_q9",
-    "q_sql_tpch_q11",
-    "q_sql_tpch_q12",
-    "q_sql_tpch_q15",
-    "q_sql_tpch_q16",
-    "q_sql_tpch_q17",
-    "q_sql_tpch_q20",
-    "q_sql_tpch_q21",
-    "q_lm_score",
-    "q_anomaly_mad",
-    "q_rolling_median",
-    "q_dedup_canonical",
-    "q_mix_rebalance",
-    "q_variant_extract",
-    "q_except_all",
-    "q_intersect_all",
-    "q_islands",
-    "q_join_nullsafe",
-    "q_join_asof_nearest",
-    "q_curation_pipeline",
-    "q_source_overlap",
-    # round-5 additions: SQL-surface (LATERAL decorrelation, recursive
-    # CTE), shuffle-key skew pre-flight, int8 embedding compression,
-    # Arrow-batch UDF boundary, streaming upsert batch twin,
-    # incremental compaction (layout writer: manifest read is the
-    # measured phase)
-    "q_lateral_topn",
-    "q_recursive_cte",
-    "q_skew_diagnose",
-    "q_embedding_quantize",
-    "q_udf_arrow",
-    "q_stream_upsert",
-    "q_merge_incremental",
-    "q_window_distinct",
-    "q_dq_audit",
-    # round-6 additions: LSH-fed Levenshtein verify (the open-scale
-    # editdist path) and the reference-default-vs-spark-default
-    # vectorized batch-size parity scan
-    "q_dedup_editdist_lsh",
-    "q_scan_batch_size",
-    # compaction: write phase = scatter 64 small files + merge_files
-    # compact; read phase = distributed footer scan of the output
-    "q_merge_compaction",
-    # round-10 additions: type-widening generation read (r9 verdict #2:
-    # the only registered sweep-eligible query without a floor — its
-    # build() writes a 10-row fixture pair, so the measured phase is
-    # the footer-probe + cast-union read plan)
-    "q_schema_widening",
-    # sliding-gram repeated-substring spans (the Lee-et-al.-2022
-    # suffix-array analog; ~10x q_dedup_segments' gram rows by design)
-    "q_dedup_substring",
-    # the APPLY half: repeated-substring word cover removed per doc
-    "q_substring_clean",
-    # round-11 addition: perceptual blockhash near-dup over media
-    # payloads (pigeonhole-exact banded candidates, bit_count verify)
-    "q_media_neardup",
-    # round-11 addition: DSIR importance weights + Gumbel-top-k
-    # resample (Xie et al. 2023 data selection)
-    "q_dsir_weights",
-    "q_dsir_sample",
-    # round-11 addition: CCNet head/middle/tail perplexity triage
-    "q_perplexity_bucket",
-    # round-11 addition: interpolated bigram-LM scoring (JM smoothing)
-    "q_lm_bigram",
-    # round-11 additions: alpha-sampling mixture plan + DPR-style
-    # hard-negative mining
-    "q_mix_temperature",
-    "q_hard_negatives",
-    # round-11 addition: per-language tokenizer fertility
-    "q_tokenizer_fertility",
-    # round-11 addition: balanced output-shard manifest (LPT-style)
-    "q_shard_balance",
-    # round-11 addition: plain-text source/sink leg
-    "q_text_roundtrip",
-    # round-11 addition: GPT-3-style n-gram decontamination
-    "q_decontaminate_ngram",
-    # round-12 additions: winnowing fingerprint selection (MOSS),
-    # Zipf's-law corpus-health fit, watermark late-data accounting
-    "q_winnowing",
-    "q_winnow_overlap",
-    "q_novelty_lsh",
-    # the JVM moments twin of q_grouped_apply: the Python-boundary
-    # cost measured side by side (same output, same oracle)
-    "q_grouped_apply_moments",
-    "q_doc_stitch",
-    "q_emb_drift",
-    "q_zipf_fit",
-    "q_late_data",
-    # round-13 additions: packing-waste audit, T5 span-corruption
-    # plan, per-rule quality-gate matrix, Heaps'-law vocabulary
-    # growth, dedup cluster-size distribution, Benford first-digit
-    # audit, explicit semi-join reduction
-    "q_pad_waste",
-    "q_span_mask",
-    "q_quality_gates",
-    "q_heaps_fit",
-    "q_cluster_stats",
-    "q_benford",
-    "q_semijoin_reduce",
-    "q_graph_degree",
-    "q_ab_assign",
-    "q_heavy_hitters",
-    "q_bloom_novelty",
-    "q_dedup_containment_lsh",
-    "q_anomaly_rate",
-]
-
-# queries whose build() performs an eager layout write; bench reports
-# the write phase separately so read-side numbers stay comparable
-LAYOUT_WRITERS = {
-    "q_partition_pruning",
-    "q_dpp_join",
-    "q_zorder_layout",
-    "q_bucketed_join",
-    "q_merge_compaction",
-    "q_merge_incremental",
-}
+# Sweep entries in registry definition order.  Layout writers run in
+# their own phase after the plan queries, and their eager write is
+# reported as a separate ``<name>__write`` entry.
+SWEEP = [n for n, q in REGISTRY.items() if q.bench]
+WRITES_LAYOUT = {n for n, q in REGISTRY.items() if q.writes_layout}
 
 
 def _loadavg1() -> float | None:
@@ -314,11 +46,10 @@ def _loadavg1() -> float | None:
 def run_query(name: str, spark, sf_dir: str) -> tuple[float, float]:
     """Returns (build_sec, exec_sec).
 
-    build() is normally free plan construction, but layout queries
-    (LAYOUT_WRITERS) and iterative operators (q_dedup_cluster) execute
-    eager writes/checkpoints inside it — timing it separately both
-    keeps them honestly charged and splits layout write cost from the
-    pruned-read cost the layout exists to prove."""
+    build() is normally free plan construction, but layout writers
+    and iterative operators execute eager writes/checkpoints inside
+    it; timing it separately charges that work and splits the layout
+    write from the pruned read the layout exists to prove."""
     t0 = time.perf_counter()
     df = REGISTRY[name].build(spark, sf_dir)
     t1 = time.perf_counter()
@@ -359,16 +90,7 @@ def main() -> None:
         # a typo'd probe must not report a plausible 0-query success
         print(f"# unknown query name(s): {unknown}", file=sys.stderr)
         raise SystemExit(2)
-    dropped = [n for n in HEADLINE if n not in REGISTRY]
-    if dropped:
-        # a HEADLINE entry losing its registration silently shrinks
-        # full-sweep coverage — say so loudly (but still produce a
-        # metric line: the driver needs a number for the round)
-        print(
-            f"# WARNING: HEADLINE names missing from REGISTRY: {dropped}",
-            file=sys.stderr,
-        )
-    names = [n for n in (requested or HEADLINE) if n in REGISTRY]
+    names = requested or SWEEP
     # explicit-subset runs are ad-hoc probes: never let them clobber
     # the full-sweep detail record or the best-known watchlist
     full_sweep = not requested
@@ -413,14 +135,12 @@ def main() -> None:
     finally:
         shutil.rmtree(warm_dir, ignore_errors=True)
 
-    # Writer/tempdir queries (eager FS writes inside build) run in
-    # their own phase AFTER the pure-plan sweep, each from a clean
-    # heap: their write phases are the biggest garbage producers, and
-    # interleaving them let their cost leak into unrelated
-    # measurements (r5: q_embedding_quantize billed 8.0 s in-sweep vs
-    # 0.55 s isolated).
-    plan_names = [n for n in names if n not in LAYOUT_WRITERS]
-    writer_names = [n for n in names if n in LAYOUT_WRITERS]
+    # Layout writers (eager FS writes inside build) run in their own
+    # phase after the plan queries, each from a clean heap: their
+    # writes are the biggest garbage producers, and interleaving them
+    # lets their cost leak into unrelated measurements.
+    plan_names = [n for n in names if n not in WRITES_LAYOUT]
+    writer_names = [n for n in names if n in WRITES_LAYOUT]
 
     # One failing query must not abort the sweep: the round would then
     # record NO benchmark at all (the round-3 'parsed: null' failure
@@ -553,7 +273,7 @@ def main() -> None:
                 if n in expected
                 and expected[n] > 0
                 and n not in flagged
-                and n not in LAYOUT_WRITERS
+                and n not in WRITES_LAYOUT
                 and not n.endswith("__write")
             ),
             key=lambda n: abs(expected[n] - 1.0),
@@ -587,7 +307,7 @@ def main() -> None:
                     f"{type(exc).__name__}: {exc}"[:300]
                 )
                 break
-            if base in LAYOUT_WRITERS:
+            if base in WRITES_LAYOUT:
                 one = b if name.endswith("__write") else e
             else:
                 one = b + e
@@ -628,7 +348,7 @@ def main() -> None:
     # number at all (BENCH_r03 parsed: null).  The FINAL stdout line is
     # a compact, always-parseable metric JSON with no per-query dict.
     load_end = _loadavg1()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
     detail = {
         "queries": timings,
         "n": len(timings),
@@ -648,15 +368,10 @@ def main() -> None:
     }
     print(json.dumps(detail), file=sys.stderr)
     if full_sweep:
-        # Per-query timings land in a STABLE COMMITTED ARTIFACT every
-        # full-sweep run (r14 verdict "Next round" #2: the driver's
-        # per-query PERF comparison was blind because only the compact
-        # total survives its 2,000-char stdout tail).  bench_detail.json
-        # is the canonical latest-run record; the cpus-suffixed sidecar
-        # keeps the main-core and low-core runs from clobbering each
-        # other when the driver measures scaling (c32 then c8 in one
-        # checkout).  Additive only: the stdout metric-line contract is
-        # unchanged.
+        # Every full sweep writes its per-query timings to
+        # bench_detail.json (the latest run) and to a sidecar named by
+        # core count, so runs at different core counts in one checkout
+        # do not overwrite each other.
         base_dir = os.path.dirname(os.path.abspath(__file__))
         explicit = os.environ.get("SPARK_GRAFT_DETAIL_PATH")
         paths = [explicit or os.path.join(base_dir, "bench_detail.json")]

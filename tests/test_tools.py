@@ -155,136 +155,6 @@ def test_make_scaled_dir_preserves_referential_integrity(
     }
 
 
-def _run_fold(cwd, *extra):
-    import subprocess
-    import sys
-
-    return subprocess.run(
-        [sys.executable, "/root/repo/tools/fold_evidence.py", *extra],
-        cwd=str(cwd),
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
-
-
-def test_fold_evidence_cwd_independent(tmp_path):
-    """The evidence glob is anchored to the repo root: run from any
-    other cwd it must still find every CORRECTNESS file — a silently
-    empty ledger pasted into queries.py would wipe the evidence
-    table.  Assertions are shape-only (the r7 judge's fix: the exact
-    pending set depends on which live CORRECTNESS artifacts exist at
-    HEAD, which mutates the moment a driver round lands — the
-    content-level rules are pinned against a synthesized fixture dir
-    in the two tests below)."""
-    r = _run_fold(tmp_path)
-    assert r.returncode == 0
-    assert "_HASH_GREEN_BY_ROUND" in r.stdout
-    assert "_ROWS_SEEN_BY_ROUND" in r.stdout
-    # the folded ledger is populated, not empty
-    assert r.stdout.count('"q_') > 100
-    assert "never driver-evidenced (" in r.stdout
-
-
-def test_fold_evidence_synthesized_pending_states(tmp_path):
-    """Ledger folding against a controlled evidence dir: both the
-    some-pending and the all-but-evidenced states, independent of
-    which CORRECTNESS_r*.json exist in the live repo."""
-    import json
-    import re
-
-    from tmp_parquet_merge_spark.queries import REGISTRY
-
-    total = len(REGISTRY)
-    # pick one currently-oracle-backed and one currently-rows-only
-    # name from the live registry (membership, not a pinned list, so
-    # future conversions don't stale this test)
-    oracled = next(n for n, q in REGISTRY.items() if q.oracle is not None)
-    rows_only = next(n for n, q in REGISTRY.items() if q.oracle is None)
-
-    ev = tmp_path / "ev1"
-    ev.mkdir()
-    (ev / "CORRECTNESS_r01.json").write_text(
-        json.dumps(
-            {
-                oracled: {"hash_match": True, "spark_rows": 5, "err": None},
-                rows_only: {
-                    "hash_match": None,
-                    "spark_rows": 5,
-                    "err": "no_oracle",
-                },
-            }
-        )
-    )
-    r = _run_fold(tmp_path, "--evidence-dir", str(ev))
-    assert r.returncode == 0
-    (never_line,) = [
-        ln for ln in r.stdout.splitlines() if "never driver-evidenced" in ln
-    ]
-    assert f"never driver-evidenced ({total - 2})" in never_line
-    never = set(re.findall(r"'(q_\w+)'", never_line))
-    assert oracled not in never and rows_only not in never
-    # a LATER round's evidence supersedes: same names again in r02
-    (ev / "CORRECTNESS_r02.json").write_text(
-        json.dumps({oracled: {"hash_match": True, "spark_rows": 5, "err": None}})
-    )
-    r2 = _run_fold(tmp_path, "--evidence-dir", str(ev))
-    assert f'2: (\n        "{oracled}",' in r2.stdout
-
-
-def test_fold_evidence_oracle_status_rules(tmp_path):
-    """The evidence-tier fixups: hash evidence for a now-oracle-less
-    query folds into the rows table; rows evidence for a query that
-    has since GAINED an oracle is dropped (re-queues at tier 0) —
-    the exact rule that made the r7 conversions re-enter the driver
-    window."""
-    import json
-
-    from tmp_parquet_merge_spark.queries import REGISTRY
-
-    oracled = next(n for n, q in REGISTRY.items() if q.oracle is not None)
-    rows_only = next(n for n, q in REGISTRY.items() if q.oracle is None)
-
-    ev = tmp_path / "ev2"
-    ev.mkdir()
-    (ev / "CORRECTNESS_r03.json").write_text(
-        json.dumps(
-            {
-                # hash evidence for a query that is rows-only at HEAD
-                rows_only: {"hash_match": True, "spark_rows": 5, "err": None},
-                # rows evidence for a query that is oracle-backed at HEAD
-                oracled: {
-                    "hash_match": None,
-                    "spark_rows": 5,
-                    "err": "no_oracle",
-                },
-            }
-        )
-    )
-    r = _run_fold(tmp_path, "--evidence-dir", str(ev))
-    assert r.returncode == 0
-    # diagnostic NOTE lines go to stderr (r14: --markdown output must
-    # pipe clean into EVIDENCE.md without ledger-comment preamble)
-    assert f"# NOTE: {rows_only} hash-green in r3 but now oracle-less" in r.stderr
-    assert f"# NOTE: {oracled} rows-only evidence (r3) but now has an" in r.stderr
-    assert "# NOTE" not in r.stdout
-    # rows_only landed in the rows table; oracled is pending again
-    (never_line,) = [
-        ln for ln in r.stdout.splitlines() if "never driver-evidenced" in ln
-    ]
-    assert oracled in never_line and rows_only not in never_line
-
-
-def test_fold_evidence_empty_dir_errors(tmp_path):
-    """No evidence files must be a loud non-zero exit, never an empty
-    ledger (which, pasted into queries.py, wipes the table)."""
-    ev = tmp_path / "empty"
-    ev.mkdir()
-    r = _run_fold(tmp_path, "--evidence-dir", str(ev))
-    assert r.returncode == 2
-    assert "no CORRECTNESS_r*.json" in r.stderr
-
-
 def test_bench_rejects_unknown_query_names():
     """A typo'd probe must exit non-zero before any Spark work, not
     report a plausible 0-query success."""

@@ -135,7 +135,7 @@ _NGRAM_JACCARD_ORACLE = f"""
 """
 
 
-@query("q_dedup_ngram", oracle=_NGRAM_JACCARD_ORACLE)
+@query("q_dedup_ngram", oracle=_NGRAM_JACCARD_ORACLE, bench=False)
 def q_dedup_ngram(spark, sf_dir):
     """Exact word-3-gram Jaccard near-dup pairs (sim ≥ 0.5) — the
     verify stage of the near-dup pipeline, oracle-checked.  Input
@@ -477,7 +477,7 @@ _EDITDIST_ORACLE = f"""
 """
 
 
-@query("q_dedup_editdist", oracle=_EDITDIST_ORACLE)
+@query("q_dedup_editdist", oracle=_EDITDIST_ORACLE, bench=False)
 def q_dedup_editdist(spark, sf_dir):
     """Character-level (Levenshtein) near-dup pairs with 2-word prefix
     blocking: the small-edit complement to shingle Jaccard — catches
@@ -638,7 +638,7 @@ def _exact_cluster_assignments(spark, sf_dir):
     return dedup.dedup_clusters(pairs, docs, "doc_id")
 
 
-@query("q_dedup_cluster", oracle=_CLUSTER_ORACLE)
+@query("q_dedup_cluster", oracle=_CLUSTER_ORACLE, bench=False)
 def q_dedup_cluster(spark, sf_dir):
     """Connected components over the near-dup pairs — the dedup
     pipeline's final stage: every document labelled with its
@@ -697,6 +697,7 @@ def q_split_assign(spark, sf_dir):
 
 @query(
     "q_dedup_embedding",
+    bench=False,
     oracle=f"""
         WITH a AS (SELECT vec_id, embedding FROM embeddings
                    WHERE vec_id < {_PAIR_CAP}),
@@ -1476,7 +1477,7 @@ _CONTAMINATION_ORACLE = f"""
 """
 
 
-@query("q_contamination", oracle=_CONTAMINATION_ORACLE)
+@query("q_contamination", oracle=_CONTAMINATION_ORACLE, bench=False)
 def q_contamination(spark, sf_dir):
     """Train/eval contamination detection: near-duplicate pairs
     (word-3-gram Jaccard ≥ 0.5) whose members fall in DIFFERENT
@@ -1712,7 +1713,7 @@ def _byte_hist_oracle() -> str:
     """
 
 
-@query("q_multimodal_features", oracle=_byte_hist_oracle())
+@query("q_multimodal_features", oracle=_byte_hist_oracle(), bench=False)
 def q_multimodal_features(spark, sf_dir):
     """Multimodal plumbing: binary payload + typed metadata struct →
     Arrow-batched mapInPandas feature extraction (deterministic fake
@@ -1751,6 +1752,7 @@ def q_multimodal_features(spark, sf_dir):
 
 @query(
     "q_frame_sample",
+    bench=False,
     # The sampled frames are pure byte arithmetic over the synthesized
     # payload (UTF-8 bytes of the document text), so DuckDB re-derives
     # them by slicing the payload's hex spelling: 2 hex chars per

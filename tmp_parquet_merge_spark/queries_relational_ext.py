@@ -48,6 +48,7 @@ def q_agg_cube(spark, sf_dir):
 
 @query(
     "q_agg_stats",
+    bench=False,
     oracle="""
         SELECT l_returnflag,
                round(stddev_samp(l_extendedprice), 4) AS sd_price,
@@ -319,6 +320,7 @@ def q_agg_sketch(spark, sf_dir):
 
 @query(
     "q_agg_collect",
+    bench=False,
     oracle="""
         SELECT n_regionkey,
                array_to_string(list_sort(list(DISTINCT n_name)), '|') AS nations
@@ -371,6 +373,7 @@ def q_pivot(spark, sf_dir):
 
 @query(
     "q_join_outer",
+    bench=False,
     oracle="""
         SELECT c.c_custkey, c.c_name, o.o_orderkey, o.o_totalprice
         FROM customer c LEFT JOIN orders o
@@ -395,6 +398,7 @@ def q_join_outer(spark, sf_dir):
 
 @query(
     "q_scalar_math",
+    bench=False,
     oracle="""
         SELECT l_orderkey, l_linenumber,
                round(sqrt(l_quantity), 6) AS sqrt_qty,
@@ -421,6 +425,7 @@ def q_scalar_math(spark, sf_dir):
 
 @query(
     "q_scalar_regex",
+    bench=False,
     oracle="""
         SELECT p_partkey,
                regexp_extract(p_name, '^([a-z]+)', 1) AS first_word,
@@ -444,6 +449,7 @@ def q_scalar_regex(spark, sf_dir):
 
 @query(
     "q_scalar_conditional",
+    bench=False,
     oracle="""
         SELECT o_orderkey,
                CASE WHEN o_totalprice >= 300000 THEN 'high'
@@ -486,6 +492,7 @@ def _views(spark, sf_dir, *names):
 
 @query(
     "q_sql_scalar_subquery",
+    bench=False,
     oracle="""
         SELECT o_orderkey, o_totalprice
         FROM orders
@@ -577,6 +584,7 @@ def q_sql_tpch_q3(spark, sf_dir):
 
 @query(
     "q_partition_pruning",
+    writes_layout=True,
     oracle="""
         SELECT o_orderkey, o_custkey, o_totalprice,
                CAST(year(o_orderdate) AS INTEGER) AS o_year
@@ -737,6 +745,7 @@ def q_incremental_agg(spark, sf_dir):
 
 @query(
     "q_zorder_layout",
+    writes_layout=True,
     oracle="""
         SELECT l_orderkey, l_partkey, l_suppkey,
                CAST(l_quantity AS DOUBLE) AS l_quantity
@@ -863,6 +872,7 @@ def q_funnel(spark, sf_dir):
 
 @query(
     "q_dpp_join",
+    writes_layout=True,
     oracle="""
         WITH y AS (
             SELECT DISTINCT CAST(year(o_orderdate) AS INTEGER) AS y
@@ -906,6 +916,7 @@ def q_dpp_join(spark, sf_dir):
 
 @query(
     "q_bucketed_join",
+    writes_layout=True,
     oracle="""
         SELECT o.o_orderkey, o.o_custkey, o.o_totalprice, c.c_name
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -1072,6 +1083,7 @@ def q_salted_join(spark, sf_dir):
 
 @query(
     "q_salted_agg",
+    bench=False,
     oracle="""
         SELECT event_type,
                COUNT(*) AS n_events,

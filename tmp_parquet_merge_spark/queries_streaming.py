@@ -23,6 +23,7 @@ from tmp_parquet_merge_spark.streaming.windows import (
 
 @query(
     "q_window_sliding",
+    bench=False,
     oracle="""
         WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type FROM events)
         SELECT time_bucket(INTERVAL 30 MINUTE, ts)

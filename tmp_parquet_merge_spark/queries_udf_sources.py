@@ -36,6 +36,7 @@ def _scratch(prefix: str) -> str:
 
 @query(
     "q_union_files",
+    bench=False,
     oracle="""
         SELECT c_custkey AS custkey FROM customer
         UNION
@@ -120,6 +121,7 @@ def q_grouped_apply(spark, sf_dir):
 
 @query(
     "q_csv_roundtrip",
+    bench=False,
     oracle="""
         SELECT n_nationkey, n_name, n_regionkey FROM nation
     """,
@@ -160,6 +162,7 @@ def q_orc_roundtrip(spark, sf_dir):
 
 @query(
     "q_json_roundtrip",
+    bench=False,
     oracle="""
         SELECT r_regionkey, r_name FROM region
     """,

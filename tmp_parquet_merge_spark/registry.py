@@ -22,14 +22,30 @@ class Query:
     build: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     doc: str
+    # part of bench.py's sweep; off for surface checks a benched query
+    # already exercises and for the capped exact oracle twins of the
+    # benched LSH operators
+    bench: bool = True
+    # build() performs an eager layout write; bench.py times that write
+    # as a separate ``<name>__write`` entry
+    writes_layout: bool = False
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def query(name: str, oracle: str | None = None):
+def query(
+    name: str,
+    oracle: str | None = None,
+    *,
+    bench: bool = True,
+    writes_layout: bool = False,
+):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = Query(name, fn, oracle, (fn.__doc__ or "").strip())
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} is already registered")
+        doc = (fn.__doc__ or "").strip()
+        REGISTRY[name] = Query(name, fn, oracle, doc, bench, writes_layout)
         return fn
 
     return deco
@@ -55,32 +71,34 @@ def t_spread(
 ) -> DataFrame:
     """:func:`t`, plus a conditional repartition for the fact tables
     when the scan has fewer splits than the cluster's parallelism
-    (r14 optimization round — dedup.spread_scan; no-op on any real
-    multi-file dataset).  Used by the SQL-view registration helpers so
-    aggregate/join-heavy queries get cluster-parallel map sides on
-    one-row-group local files; every aggregate in those queries
-    follows the repo's DECIMAL(18,6) order-independent-sum discipline,
-    so the layout change cannot perturb results (full oracle parity
-    re-verified after the change).  Plain scans keep :func:`t` — a
-    shuffle would only add cost there.
+    (``dedup.spread_scan``; a no-op on a multi-file dataset).  Used by
+    the SQL-view registration helpers so aggregate/join-heavy queries
+    get cluster-parallel map sides on one-row-group local files.  Every
+    aggregate in those queries uses the DECIMAL(18,6)
+    order-independent sum, so the layout change cannot perturb results.
+    Plain scans keep :func:`t` — a shuffle would only add cost there.
 
-    ``key`` (r15, r14 advisor): override the default orderkey spread
-    key with the column(s) the query's FIRST exchange actually
-    clusters on (q2's (l_partkey, l_suppkey) supply aggregate, q11's
-    and q17's l_partkey aggregates) so the deficient-scan spread
-    exchange is REUSED downstream instead of adding a second
-    full-table shuffle before it."""
-    df = t(spark, sf_dir, name)
+    ``key`` overrides the table's default spread key with the
+    column(s) the query's first exchange clusters on, so that exchange
+    reuses the spread instead of adding a second full-table shuffle.
+    Only the fact tables in ``_FACT_SPREAD_KEYS`` spread; ``key`` on
+    any other table raises ``ValueError``."""
     keys = _FACT_SPREAD_KEYS.get(name)
-    if keys is not None:
-        from tmp_parquet_merge_spark.operators.dedup import spread_scan
+    if keys is None and key is not None:
+        raise ValueError(
+            f"t_spread key={key!r} given for {name!r}, which does not "
+            f"spread (spread tables: {sorted(_FACT_SPREAD_KEYS)})"
+        )
+    df = t(spark, sf_dir, name)
+    if keys is None:
+        return df
+    from tmp_parquet_merge_spark.operators.dedup import spread_scan
 
-        if key is not None:
-            keys = key
-        if isinstance(keys, str):
-            keys = (keys,)
-        df = spread_scan(df, *keys)
-    return df
+    if key is not None:
+        keys = key
+    if isinstance(keys, str):
+        keys = (keys,)
+    return spread_scan(df, *keys)
 
 
 TABLES = (

@@ -1,21 +1,17 @@
-"""Driver-faithful pre-flight for the correctness window.
+"""Pandas-canonicalization parity check.
 
-The per-round driver (CORRECTNESS_r0N.json) collects each registered
-query on Spark AND its DuckDB oracle into pandas, canonicalizes both
-with a column-name sort followed by ``sort_values`` over ALL columns,
-and hashes the values.  That pandas sort path crashes on unhashable
-cells (``Categorical`` -> ``factorize`` -> ``TypeError: unhashable
-type: 'list'``) — the exact failure that turned q_agg_collect (r2) and
-q_multimodal_features (r3) into ERR rows even though the local
-normalizer in tools/check_oracle.py handled lists fine.
-
-This tool replicates the driver's canonicalization verbatim so list/
-dict/ndarray cells crash HERE, at sf0.01 on the dev box, not in the
-round's one driver run.  Usage:
+Collects each registered query on Spark and its DuckDB oracle into
+pandas, canonicalizes both with a column-name sort followed by
+``sort_values`` over ALL columns, and compares the values.  That pandas
+sort path crashes on unhashable cells (``Categorical`` -> ``factorize``
+-> ``TypeError: unhashable type: 'list'``), which the normalizer in
+tools/check_oracle.py tolerates, so this check is where list/dict/
+ndarray cells fail.  Usage:
 
     python tools/driver_sim.py [sf_dir] [--first N] [query ...]
 
-Default: the first 50 registry entries (the driver's window) at sf0.01.
+Default: every registry entry, in definition order, at sf0.01.
+``--first N`` limits the run to the first N entries.
 """
 
 from __future__ import annotations
@@ -95,7 +91,7 @@ def _hashes_apart(a, b) -> bool:
 
 def main() -> None:
     args = [a for a in sys.argv[1:]]
-    first = 50
+    first = None
     if "--first" in args:
         i = args.index("--first")
         try:
