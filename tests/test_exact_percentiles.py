@@ -99,3 +99,35 @@ def test_agg_sketch_rows_unchanged(spark, sf_dir):
         for r in REGISTRY["q_agg_sketch"].build(spark, sf_dir).collect()
     }
     assert old == new
+
+
+@pytest.mark.parametrize("n_buckets", [1, 1024])
+def test_null_key_and_all_null_groups_match_builtin(spark, n_buckets):
+    # F.percentile keeps a NULL-key group and gives a group whose
+    # values are all NULL a NULL percentile; NULL values never count
+    rows = [
+        (None, 1.0), (None, 3.0), (None, None), (None, 2.0),
+        ("all_null", None), ("all_null", None),
+        ("some_null", 2.0), ("some_null", None), ("some_null", 5.0),
+        ("one", 7.0),
+    ]
+    df = spark.createDataFrame(rows, "g string, v double")
+    _assert_bit_identical(df, "g", "v", PCTS, n_buckets=n_buckets)
+
+
+def test_agg_sketch_percentile_path_scans_value_relation_three_times(
+    spark, sf_dir
+):
+    # stats, histogram and candidate re-read: one scan each; every
+    # other consumer must reuse an exchange, and no sort-based
+    # percentile aggregate may come back
+    li = t(spark, sf_dir, "lineitem")
+    df = _exact_group_percentiles(
+        li, "l_returnflag", "l_extendedprice", PCTS
+    )
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("FileScan parquet") <= 3, final
+    assert "percentile(" not in final

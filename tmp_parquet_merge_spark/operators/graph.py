@@ -6,17 +6,23 @@ connected components in dedup.py) with PageRank — the canonical
 "repeat a join-aggregate until converged" workload, and the shape a
 link-analysis pass over a 100 TB web-crawl corpus takes.
 
-Scale notes: each iteration is one join (rank ⋈ edges, keyed on the
-source node — both sides hash-partitioned the same way, so AQE reuses
-the exchange across iterations) plus one map-side-combined aggregate
-keyed on the destination.  Rank state is O(nodes), never collected;
-``localCheckpoint`` truncates the lineage each round so the plan
-doesn't grow with iteration count (same discipline as
-dedup.connected_components).
+Scale notes: a graph with at most ``driver_state_max_edges`` edges is
+collected once and iterated in NumPy on the driver (no Spark job per
+round).  Above that gate each iteration is one join (rank ⋈ edges,
+keyed on the source node — the edge list is persisted pre-partitioned
+and sorted, so its side of the join needs no exchange) plus one
+map-side-combined aggregate keyed on the destination.  Rank state is
+O(nodes) and never collected there; ``localCheckpoint`` truncates the
+lineage so the plan doesn't grow with iteration count (same
+discipline as dedup.connected_components).
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -168,235 +174,207 @@ def pagerank(
     checkpoint_every: int = 1,
     num_partitions: int | None = None,
     symmetric: bool = False,
-    broadcast_state_max_nodes: int = 100_000,
+    driver_state_max_edges: int = 8_000_000,
 ) -> DataFrame:
     """PageRank over a directed edge list (columns ``src``, ``dst``).
 
     Returns (node, rank, n_iter) with ranks summing to ~1.  Dangling
     nodes (no out-edges) redistribute their mass uniformly each round —
     the standard formulation, kept exactly so the NumPy reference in
-    tests/test_graph.py matches to float tolerance.
+    tests/test_graph.py matches to float tolerance.  ``tol`` > 0 stops
+    the loop once the L1 rank delta drops below it; the delta is read
+    on rounds that are multiples of both ``check_every`` and
+    ``checkpoint_every`` (and on the last round), on either path below.
 
-    Every round: contribs = rank/out_deg joined through edges (one
-    shuffle on src, one agg shuffle on dst — both reuse the same hash
-    partitioning).  Iterative-loop economics: the dangling mass rides
-    the PLAN as a broadcast 1-row aggregate (crossJoin), not a driver
-    action — and is skipped entirely when a one-time upfront probe
-    shows the graph has no dangling nodes (symmetrized graphs never
-    do), so a round costs exactly ONE job (the eager localCheckpoint
-    that also truncates lineage) plus, every ``check_every`` rounds, a
-    scalar L1-delta read for the ``tol`` early exit.
+    One job counts the edges, with no aggregate exchange.  Then one of
+    two paths runs:
 
-    The edge list is hash-partitioned on ``src``, sorted within
-    partitions, and PERSISTED (MEMORY_AND_DISK) rather than
-    localCheckpointed (round 7): a checkpointed RDD surfaces as
-    ``UnknownPartitioning``, so every round's sort-merge join was
-    re-shuffling AND re-sorting the full edge list — the dominant
-    cost at scale (10 rounds × a 60M-edge exchange in the 25× stress).
-    ``InMemoryTableScan`` preserves the cached plan's partitioning
-    and ordering, so each round's join does ZERO work on the edges
-    side: only the (small) state exchanges per round.  25× re-measure:
-    the 10-round loop fell from ~110 s to ~31 s (SCALE.md round 7).
-    The cache is released (unpersist) before returning — the final
-    state is eagerly checkpointed, so the result does not depend on
-    it.
+    * **Driver path** — at most ``driver_state_max_edges`` edges (the
+      default covers the 2.4M-edge sf0.1 graph; driver memory peaks
+      near 100 B per edge, under 1 GB at the default).  The edge list is collected once as Arrow, node
+      ids map to dense indexes (``np.unique``), and every round is one
+      ``np.bincount`` of ``rank[src] / deg[src]`` over the edges sorted
+      by (dst, src) — a fixed summation order, so the ranks are
+      deterministic.  Spark runs no job per round.
+    * **Sort-merge path** — above the gate.  The edges are persisted
+      hash-partitioned and sorted on ``src`` (:func:`keyed_edge_cache`)
+      and one job counts nodes and dangling nodes.  Each round joins
+      the rank state to that cache (zero Exchange and zero Sort on the
+      edge side: the cache keeps its partitioning and ordering) and
+      aggregates the contributions on ``dst``; the dangling mass rides
+      the plan as a broadcast 1-row aggregate.  ``checkpoint_every``
+      rounds share one eager ``localCheckpoint``, which truncates the
+      lineage; the state carries the previous rank as ``prev`` so the
+      L1 delta is a scan-aggregate over the checkpointed state.
+      ``num_partitions`` pins the node-hash layout of the edge cache
+      and the state (None keeps the session's shuffle-partition
+      default).
 
-    The checkpointed state carries the previous round's rank as a
-    ``prev`` column, so the L1-delta read is a scan-aggregate over the
-    already-materialized state — NOT a state⋈new_state join (that join
-    roughly doubled per-check cost).  ``num_partitions`` pins a fixed
-    hash partitioning on the node key for both the edge list (by
-    ``src``) and the state (by ``node``): every round's plans then
-    shuffle on the same layout, and the only real data movement left is
-    the contribution flow src→dst.  Size it like any shuffle: ~128 MB
-    of state per partition on a cluster (None keeps the session's
-    shuffle-partition default).
+    Both paths round the same doubles with the same ``F.round``, and
+    they agree with each other (pinned in tests/test_pagerank_gate.py).
 
-    ``checkpoint_every`` batches N rounds of join-aggregate into one
-    eager job before truncating lineage (the plan then holds ≤ N rounds
-    — still bounded): on tiny-state graphs where per-JOB scheduling
-    overhead dominates, 2 halves the job count.  Convergence checks
-    only run on checkpointed rounds, so ``check_every`` is effectively
-    rounded up to a multiple of it.  Ranks are bit-identical for any
-    value — it is a physical knob like ``num_partitions``.
-
-    ``symmetric=True`` (r14 optimization round, guide §2.4 "remove
-    shuffles outright"): the caller asserts every edge is present in
-    both directions (q_pagerank's :func:`symmetrize` output).  Then
-    the node set IS the out-degree key set — the nodes union+distinct
-    pass over the edge cache, the left-join that attaches degrees to
-    possibly-degree-less nodes, and the dangling probe job all
-    disappear (a symmetric graph cannot have a node without
-    out-edges).  Results are identical by construction; the generic
-    default keeps the full dangling-aware path.  WARNING (r14 advisor):
-    this is an UNCHECKED caller assertion — on a graph that is NOT
-    symmetric, nodes with only in-edges are silently DROPPED from the
-    output (they never appear in the out-degree key set), ``n_nodes``
-    is undercounted, and no error is raised.  Pass it only for edge
-    lists produced by :func:`symmetrize` (or provably closed under
-    reversal); anything else must use the default path.
-
-    ``broadcast_state_max_nodes`` (r14 optimization round, guide §3.1
-    / §2.4): when the driver-known node count is at or under this gate,
-    each round's two state joins run as broadcast-hash joins — the
-    rank state (~32 B/node) broadcasts into the contributions join, so
-    the persisted edge cache streams through with NO exchange and NO
-    sort on either side, and the contributions aggregate broadcasts
-    back into the state update.  A round then pays exactly ONE small
-    exchange (the dst-keyed aggregate) instead of two state exchanges
-    + a state repartition.  Per-round partial-aggregation layout is
-    governed by the edge cache's pinned partitioning in BOTH paths, so
-    inflow sums accumulate in the same order and ranks stay
-    bit-identical (oracle-verified at every bundled tier).  The gate
-    is a node-count bound (~3 MB broadcast at the default — the
-    broadcast repeats EVERY round, so the gate must sit where one
-    round's broadcast is clearly cheaper than its two state exchanges;
-    the 25x-replica 500k-node graph measured better on the sort-merge
-    path and stays on it), NOT a
-    cores-derived constant: above it — any genuinely large graph —
-    the sort-merge path over the pre-partitioned cache is unchanged.
-    The broadcast path checkpoints every round (a lazily-stacked
-    broadcast would re-execute prior rounds inside the broadcast
-    build), so ``checkpoint_every`` applies only above the gate.
-
-    Broadcast hygiene (r15, r14 verdict "what's wrong" #4): each
-    broadcast-path round builds two fresh ≤~3 MB broadcast relations
-    (the gate bounds state bytes) that are only reclaimed when the JVM
-    collects the superseded round's plan and the ContextCleaner
-    releases the blocks.  At the default ``max_iter=10`` the transient
-    is ≤ ~60 MB — noise.  A tol-driven run with ``max_iter≈100`` would
-    otherwise stack ~0.5 GB of dead broadcast blocks between GCs, so
-    the loop forces a JVM GC every 16 broadcast rounds — bounding live
-    broadcast memory at ~100 MB regardless of iteration count, off the
-    hot path (never fires at the default), and with zero effect on
-    ranks (memory-only).
+    ``symmetric=True`` is an UNCHECKED caller assertion that every edge
+    is present in both directions (:func:`symmetrize` output): the node
+    set is then the out-degree key set, so the node union+distinct
+    pass and the degree left-join drop out.  On a graph that is not
+    symmetric, the sort-merge path silently drops nodes that only have
+    in-edges; pass it only for edge lists closed under reversal.
     """
     from tmp_parquet_merge_spark.operators._iter_cache import keyed_edge_cache
 
-    # materialize the edge list once — callers often pass a derived
-    # graph (e.g. a self-join pair build) that must not be recomputed
-    # in every iteration's join.  keyed_edge_cache persists it
-    # pre-partitioned + sorted on the join key (NOT localCheckpoint:
-    # that erases partitioning) so the cached scan satisfies the
-    # join's distribution AND ordering every round, and unpersists on
-    # any exit; see operators/_iter_cache.py for the full rationale.
-    with keyed_edge_cache(edges, "src", num_partitions) as edges:
-        if symmetric:
-            # every node has out-edges: the degree table IS the node
-            # set — no union+distinct pass, no degree left-join, and
-            # no dangling probe job (deg > 0 by construction)
-            out_deg = edges.groupBy("src").agg(
-                F.count(F.lit(1)).alias("deg")
+    def checked(it: int) -> bool:
+        return it == max_iter or (
+            it % checkpoint_every == 0 and it % check_every == 0
+        )
+
+    # counting the RDD of this DataFrame's own executed plan needs no
+    # aggregate exchange, and the driver path's collect re-runs that same
+    # plan, so a derived graph's shuffles (e.g. a pair build + distinct)
+    # are computed once and nothing is cached in between
+    raw = edges.select("src", "dst")
+    n_edges = raw._jdf.queryExecution().toRdd().count()
+    if n_edges == 0 or n_edges <= driver_state_max_edges:
+        return _pagerank_on_driver(raw, damping, max_iter, tol, round_to, checked)
+    with keyed_edge_cache(raw, "src", num_partitions) as edges:
+        return _pagerank_sort_merge(
+            edges,
+            damping=damping,
+            max_iter=max_iter,
+            tol=tol,
+            round_to=round_to,
+            checked=checked,
+            checkpoint_every=checkpoint_every,
+            num_partitions=num_partitions,
+            symmetric=symmetric,
+        )
+
+
+def _pagerank_sort_merge(
+    edges: DataFrame,
+    *,
+    damping: float,
+    max_iter: int,
+    tol: float,
+    round_to: int,
+    checked: Callable[[int], bool],
+    checkpoint_every: int,
+    num_partitions: int | None,
+    symmetric: bool,
+) -> DataFrame:
+    """:func:`pagerank`'s sort-merge path over the keyed edge cache.
+    Every exit passes through an eager checkpoint (``it == max_iter``
+    or the ``tol`` break), so the result does not depend on the cache
+    the caller releases."""
+    out_deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    if symmetric:
+        node_deg = out_deg.select(F.col("src").alias("node"), "deg")
+    else:
+        nodes = (
+            edges.select(F.col("src").alias("node"))
+            .unionByName(edges.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        node_deg = nodes.join(
+            out_deg, nodes.node == out_deg.src, "left"
+        ).select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
+    n_nodes, n_dangling = node_deg.agg(
+        F.count(F.lit(1)), F.sum((F.col("deg") == 0).cast("long"))
+    ).first()
+    state = node_deg.select(
+        "node",
+        "deg",
+        F.lit(1.0 / n_nodes).alias("rank"),
+        F.lit(0.0).alias("prev"),
+    )
+    if num_partitions:
+        state = state.repartition(num_partitions, "node")
+    state = state.localCheckpoint()
+    it = 0
+    for it in range(1, max_iter + 1):
+        live = state.filter(F.col("deg") > 0)
+        contribs = (
+            live.join(edges, live.node == edges.src)
+            .select(
+                F.col("dst").alias("node"),
+                (F.col("rank") / F.col("deg")).alias("c"),
             )
-            state = out_deg.select(
-                F.col("src").alias("node"), "deg"
-            ).localCheckpoint()
-            n_nodes = state.count()
-            state = state.select(
-                "node",
-                "deg",
-                F.lit(1.0 / n_nodes).alias("rank"),
-                F.lit(0.0).alias("prev"),
+            .groupBy("node")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        rank_expr = F.lit((1.0 - damping) / n_nodes) + F.lit(
+            damping
+        ) * F.coalesce("inflow", F.lit(0.0))
+        joined = state.select(
+            "node", "deg", F.col("rank").alias("prev")
+        ).join(contribs, "node", "left")
+        if n_dangling:
+            dmass = state.filter(F.col("deg") == 0).agg(
+                F.sum("rank").alias("_dmass")
             )
-            if num_partitions:
-                state = state.repartition(num_partitions, "node")
+            joined = joined.crossJoin(F.broadcast(dmass))
+            rank_expr = (
+                rank_expr + F.lit(damping) * F.col("_dmass") / n_nodes
+            )
+        state = joined.select(
+            "node", "deg", rank_expr.alias("rank"), "prev"
+        )
+        if num_partitions:
+            state = state.repartition(num_partitions, "node")
+        if it % checkpoint_every == 0 or it == max_iter:
             state = state.localCheckpoint()
-            has_dangling = False
-        else:
-            nodes = (
-                edges.select(F.col("src").alias("node"))
-                .unionByName(edges.select(F.col("dst").alias("node")))
-                .distinct()
-            )
-            n_nodes = nodes.count()
-            out_deg = edges.groupBy("src").agg(
-                F.count(F.lit(1)).alias("deg")
-            )
-            # node, deg (0 for dangling), rank, prev (one round back)
-            state = (
-                nodes.join(out_deg, nodes.node == out_deg.src, "left")
-                .select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
-                .withColumn("rank", F.lit(1.0 / n_nodes))
-                .withColumn("prev", F.lit(0.0))
-            )
-            if num_partitions:
-                state = state.repartition(num_partitions, "node")
-            state = state.localCheckpoint()
-            has_dangling = (
-                state.filter(F.col("deg") == 0).limit(1).count() > 0
-            )
-        # the small-state broadcast path removes both per-round state
-        # exchanges (see docstring); partial inflow sums stay laid out
-        # by the edge cache's partitioning in both paths, so ranks are
-        # bit-identical across the gate
-        bcast = n_nodes <= broadcast_state_max_nodes
-        it = 0
-        for it in range(1, max_iter + 1):
-            live = state.filter(F.col("deg") > 0)
-            contribs = (
-                (F.broadcast(live) if bcast else live)
-                .join(edges, live.node == edges.src)
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("deg")).alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
-            )
-            rank_expr = F.lit((1.0 - damping) / n_nodes) + F.lit(
-                damping
-            ) * F.coalesce("inflow", F.lit(0.0))
-            joined = state.select(
-                "node", "deg", F.col("rank").alias("prev")
-            ).join(
-                F.broadcast(contribs) if bcast else contribs,
-                "node",
-                "left",
-            )
-            if has_dangling:
-                dmass = state.filter(F.col("deg") == 0).agg(
-                    F.sum("rank").alias("_dmass")
-                )
-                joined = joined.crossJoin(F.broadcast(dmass))
-                rank_expr = (
-                    rank_expr + F.lit(damping) * F.col("_dmass") / n_nodes
-                )
-            new_state = joined.select(
-                "node", "deg", rank_expr.alias("rank"), "prev"
-            )
-            if not bcast and num_partitions:
-                new_state = new_state.repartition(num_partitions, "node")
-            if bcast and it % 16 == 0:
-                # reclaim superseded per-round broadcast blocks (see
-                # docstring "Broadcast hygiene"); never fires at the
-                # default max_iter=10
-                try:
-                    edges.sparkSession.sparkContext._jvm.System.gc()
-                except Exception:
-                    pass
-            if bcast or it % checkpoint_every == 0 or it == max_iter:
-                state = new_state.localCheckpoint()
-                # convergence-check cadence is UNCHANGED by the
-                # broadcast path's extra checkpoints: checks still run
-                # only on checkpoint_every-aligned rounds, so tol>0
-                # callers exit on exactly the same iteration either
-                # side of the broadcast gate
-                if (
-                    tol > 0
-                    and (it % checkpoint_every == 0 or it == max_iter)
-                    and (it % check_every == 0 or it == max_iter)
-                ):
-                    delta = state.agg(
-                        F.sum(F.abs(F.col("rank") - F.col("prev")))
-                    ).first()[0]
-                    if delta < tol:
-                        break
-            else:
-                state = new_state
-    # every loop exit passes through an eager checkpoint (it ==
-    # max_iter or the tol break), so the result no longer needs the
-    # edge cache the with-block just released.
+            if tol > 0 and checked(it):
+                delta = state.agg(
+                    F.sum(F.abs(F.col("rank") - F.col("prev")))
+                ).first()[0]
+                if delta < tol:
+                    break
     return state.select(
+        "node",
+        F.round("rank", round_to).alias("rank"),
+        F.lit(it).alias("n_iter"),
+    )
+
+
+def _pagerank_on_driver(
+    edges: DataFrame,
+    damping: float,
+    max_iter: int,
+    tol: float,
+    round_to: int,
+    checked: Callable[[int], bool],
+) -> DataFrame:
+    """:func:`pagerank`'s driver path: one collect of the edge list,
+    then every round in NumPy, in the same double arithmetic as the
+    sort-merge path (contribution ``rank / deg`` per edge, then
+    ``(1 - d) / n + d * inflow`` plus ``d * dangling_mass / n``)."""
+    tbl = edges.toArrow()
+    src = tbl.column("src").to_numpy()
+    dst = tbl.column("dst").to_numpy()
+    nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    n = len(nodes)
+    s, d = idx[: len(src)], idx[len(src) :]
+    order = np.lexsort((s, d))
+    s, d = s[order], d[order]
+    deg = np.bincount(s, minlength=n).astype(np.float64)
+    dangling = deg == 0
+    rank = np.full(n, 1.0 / n) if n else np.zeros(0)
+    it = 0
+    for it in range(1, max_iter + 1) if n else ():
+        inflow = np.bincount(d, weights=rank[s] / deg[s], minlength=n)
+        new = (1.0 - damping) / n + damping * inflow
+        if dangling.any():
+            new = new + damping * rank[dangling].sum() / n
+        delta = np.abs(new - rank).sum()
+        rank = new
+        if tol > 0 and checked(it) and delta < tol:
+            break
+    node_type = tbl.schema.field("src").type
+    out = edges.sparkSession.createDataFrame(
+        pa.table(
+            {"node": pa.array(nodes, node_type), "rank": pa.array(rank)}
+        )
+    )
+    return out.select(
         "node",
         F.round("rank", round_to).alias("rank"),
         F.lit(it).alias("n_iter"),

@@ -24,6 +24,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -307,8 +308,6 @@ def _exact_pair_scan(
     is ~n²/2 rows of pure overhead (the 25× sweep measured 53× on
     exactly that shape).  The caller bounds n before choosing this
     path (broadcast = n·dim doubles)."""
-    import pyarrow as pa
-
     pdf = normed.select(F.col(id_col), F.col(vec_col)).toPandas()
     ids_b = pdf[id_col].to_numpy(dtype=np.int64)
     B = np.ascontiguousarray(
@@ -785,14 +784,13 @@ def kmeans_fit(
     (vec, cluster) assignment.  Deterministic init (lowest-id vectors),
     so runs are reproducible without RNG.
 
-    Each round is the classic two-step, all distributed: the (tiny)
-    centroid matrix broadcasts, assignment is one numpy matmul per
-    Arrow batch (no per-element lambdas), and the centroid update is a
-    posexplode → (cluster, dim) hash-agg — partial aggregation
-    map-side, so the shuffle carries k × dim partial sums, independent
-    of corpus size.  Convergence = max centroid shift < ``tol``
-    (driver-side on k×dim floats).  This is the fit behind
-    :func:`ivf_topk`'s index build (see :func:`kmeans_centroids`).
+    Each round is ONE shuffle-free job (see :func:`_lloyd`): every
+    partition assigns its points with one numpy matmul per Arrow batch
+    and sums them per cluster; the driver adds the k × dim partials,
+    so driver traffic is independent of corpus size.  Convergence =
+    max centroid shift < ``tol`` (driver-side on k×dim floats).  This
+    is the fit behind :func:`ivf_topk`'s index build (see
+    :func:`kmeans_centroids`).
     """
     assigned, _, _ = _lloyd(
         df, id_col=id_col, vec_col=vec_col, k=k, max_iter=max_iter, tol=tol
@@ -868,27 +866,25 @@ def _lloyd(
     max_iter: int,
     tol: float,
 ) -> tuple[DataFrame, np.ndarray, dict]:
-    base = df.select(F.col(id_col), F.col(vec_col))
-    # materialize the loop-invariant 2-column point projection ONCE:
-    # every Lloyd round otherwise re-scans the source table —
-    # max_iter+2 full table reads at 100 TB (init + rounds + final
-    # assignment) where one materialization suffices.  Same
-    # loop-invariant-build-side lesson as the pagerank edge cache,
-    # but the cheap spelling here is an eager localCheckpoint (row-
-    # format blocks): a MEMORY_AND_DISK persist pays the columnar
-    # in-memory conversion for the array<float> column, measured
-    # SLOWER than re-scanning pruned parquet (25×: warm 11.4 s vs
-    # 8.1 s uncached vs 7.0 s checkpointed — A/B in SCALE.md).  No
-    # repartition needed: assignment is map-only and the centroid
-    # update's shuffle carries k×dim partial sums regardless of
-    # layout.  Blocks free when the fit's references drop (the
-    # repo-wide localCheckpoint loop discipline).
-    # r15: the checkpoint is LAZY and the deterministic-init toPandas
-    # below is its materializing action — init + materialization fuse
-    # into ONE job instead of an eager-checkpoint job followed by a
-    # separate init read (the dedup_clusters fused-probe pattern;
-    # blocks and rows identical).
-    base = base.localCheckpoint(eager=False)
+    """Lloyd's k-means from the ``k`` lowest-id points.  Returns the
+    final assignment (lazy, against the returned centroids), the
+    centroid matrix, and {n_iter, final_shift, converged}.
+
+    The 2-column point projection is localCheckpointed once (row-format
+    blocks: a MEMORY_AND_DISK persist pays a columnar conversion of the
+    array<float> column, measured slower than re-scanning at the 25×
+    replica); the deterministic-init read is the action that
+    materializes it.  Each
+    round is then ONE shuffle-free job: per partition, NumPy assigns
+    every point to its nearest centroid (the same per-Arrow-batch
+    expansion as :func:`_nearest_udf`, so labels match it) and sums
+    the points per cluster; the driver collects the k×dim partials and
+    counts and adds them in partition order.  An empty cluster keeps
+    its centroid.  Driver memory: k×dim doubles per partition.
+    """
+    base = df.select(F.col(id_col), F.col(vec_col)).localCheckpoint(
+        eager=False
+    )
     C = np.array(
         base.orderBy(id_col).limit(k).toPandas()[vec_col].tolist(),
         dtype=np.float64,
@@ -896,31 +892,57 @@ def _lloyd(
     sc = df.sparkSession.sparkContext
     shift = float("inf")
     n_iter = 0
+    if len(C) == 0:
+        # no points: no centroids, no rounds, an empty assignment
+        stats = {"n_iter": 0, "final_shift": shift, "converged": False}
+        return (
+            base.withColumn("cluster", F.lit(None).cast("int")),
+            np.zeros((0, 0)),
+            stats,
+        )
+    k, dim = C.shape
     for _ in range(max_iter):
         n_iter += 1
-        assigned = base.withColumn(
-            "cluster", _nearest_udf(sc, C)(F.col(vec_col))
-        )
-        sums = (
-            assigned.select(
-                "cluster", F.posexplode(vec_col).alias("dim", "val")
+
+        def partials(batches, Cm=C):
+            # C rides the closure: k×dim doubles, smaller than a
+            # broadcast's bookkeeping
+            sq = (Cm * Cm).sum(axis=1)
+            sums = np.zeros((k, dim))
+            counts = np.zeros(k, dtype=np.int64)
+            for batch in batches:
+                X = (
+                    batch.column(vec_col)
+                    .flatten()
+                    .to_numpy()
+                    .astype(np.float64)
+                    .reshape(batch.num_rows, dim)
+                )
+                lab = (-2.0 * (X @ Cm.T) + sq).argmin(axis=1)
+                np.add.at(sums, lab, X)
+                counts += np.bincount(lab, minlength=k)
+            yield pa.RecordBatch.from_pydict(
+                {"s": [sums.tobytes()], "n": [counts.tobytes()]},
+                schema=pa.schema([("s", pa.binary()), ("n", pa.binary())]),
             )
-            .groupBy("cluster", "dim")
-            .agg(F.sum("val").alias("s"), F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
+
+        parts = base.mapInArrow(partials, "s binary, n binary").collect()
+        sums = np.zeros((k, dim))
+        counts = np.zeros(k, dtype=np.int64)
+        for r in parts:
+            sums += np.frombuffer(r.s).reshape(k, dim)
+            counts += np.frombuffer(r.n, dtype=np.int64)
         newC = C.copy()
-        for r in sums:
-            newC[r.cluster, r.dim] = r.s / r.n
+        hit = counts > 0
+        newC[hit] = sums[hit] / counts[hit, None]
         shift = float(np.abs(newC - C).max())
         C = newC
         if shift < tol:
             break
     # labels must reflect the RETURNED centroids: recompute the
-    # assignment once against the final C (one extra lazy projection,
-    # no extra action here, and it reads the checkpointed points, not
-    # the source) — otherwise labels trail the centroid matrix by half
-    # a Lloyd step whenever max_iter is hit first
+    # assignment once against the final C (lazy, and it reads the
+    # checkpointed points, not the source) — otherwise labels trail the
+    # centroid matrix by half a Lloyd step whenever max_iter is hit first
     assigned = base.withColumn("cluster", _nearest_udf(sc, C)(F.col(vec_col)))
     stats = {
         "n_iter": n_iter,

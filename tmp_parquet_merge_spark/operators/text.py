@@ -13,6 +13,9 @@ spelling exactly.
 
 from __future__ import annotations
 
+import collections
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1513,35 +1516,22 @@ def bpe_train(
     """Multi-round BPE tokenizer TRAINING (Sennrich, Haddow & Birch,
     ACL 2016 §3.2): ``n_merges`` fixed rounds, each picking the
     corpus-weighted most-frequent adjacent symbol pair and rewriting
-    the vocabulary by greedy left-to-right non-overlapping merge —
-    the iterative form of the single q_bpe_merge step, and the last
-    published-algorithm family the tokenizer story was missing
-    (fertility / perplexity / vocab already exist).
+    the vocabulary by greedy left-to-right non-overlapping merge.
 
     Returns the merge TABLE (step, lhs, rhs, merged, n) — the
-    tokenizer artifact itself, deterministic via (count DESC, pair
-    ASC) tie-break, so the whole training loop is exactly
-    oracle-checkable (the q_pagerank fixed-round discipline).
+    tokenizer artifact itself, deterministic via the (count DESC,
+    ``"lhs rhs"`` ASC) tie-break, so the whole training loop is exactly
+    oracle-checkable.
 
-    Scale shape (the q_pagerank loop discipline): ONE corpus scan
-    reduces to the (word, count) vocabulary relation — everything
-    after is vocabulary-sized, which is what makes BPE trainable on a
-    100 TB corpus (every production tokenizer trains this way:
-    corpus → word histogram → merges over the histogram).  Each round
-    is a vocabulary-sized pair hash-agg, a 1-row argmax collect
-    (bounded driver state, the k-means contract), and a
-    vocabulary-sized array fold; per-round relations are
-    localCheckpoint'd so plan depth stays constant across rounds.
-
-    The symbol-array fold is pure JVM higher-order-function code
-    (``F.aggregate``): merging pair (l, r) replaces the accumulator's
-    last element when it equals l and the incoming symbol equals r —
-    exactly greedy left-to-right non-overlap, since the merged symbol
-    l||r can never equal l.  No UDF anywhere.
+    ONE corpus scan reduces to the (word, count) histogram in Spark;
+    the merge rounds then run on the driver over that histogram
+    (:func:`_bpe_loop`), so driver memory is bounded by the vocabulary,
+    not the corpus — the corpus → word histogram → merges shape every
+    production tokenizer trains with.
     """
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
-    # and the map-side partial aggregates run cluster-parallel
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode and the map-side partial
+    # aggregates run cluster-parallel
     df = spread_scan(df, text_col)
     from tmp_parquet_merge_spark.operators.dedup import words
 
@@ -1560,57 +1550,64 @@ def bpe_train(
 
 def _bpe_loop(
     vocab: DataFrame, n_merges: int
-) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """The BPE training loop over a (wd, c) word histogram: returns
-    the merge list AND the final vocabulary symbolization (wd, c, sy)
-    — shared by :func:`bpe_train` (emits the merge table) and
-    :func:`bpe_apply` (tokenizes the corpus with the final sy)."""
-    cur = vocab.select(
-        "wd", "c", F.split("wd", "").alias("sy")
-    ).localCheckpoint(eager=False)
+) -> tuple[list[tuple[int, str, str, str, int]], dict[str, int]]:
+    """The BPE training loop over a (wd, c) word histogram, shared by
+    :func:`bpe_train` (emits the merge list) and :func:`bpe_apply`
+    (needs each word's final symbol count).
+
+    The driver holds the word histogram: one job collects
+    (wd, c, split(wd, "")) — Spark's own split, so the initial symbols
+    are exactly Spark's — and every round runs in Python.  A round
+    picks the pair with the highest corpus-weighted count, ties broken
+    on the ``"lhs rhs"`` string ascending (Spark's UTF-8 byte order is
+    Python's code-point order), then merges it greedily left to right
+    without overlap in the words that contain it.  Pair counts are
+    kept incrementally, so a round costs the words it touches.
+
+    Returns the merge list (step, lhs, rhs, merged, n) and
+    {word: number of symbols after the last merge}.
+    """
+    tbl = vocab.select("wd", "c", F.split("wd", "").alias("sy")).toArrow()
+    vocab_words = tbl.column("wd").to_pylist()
+    counts = tbl.column("c").to_pylist()
+    syms = tbl.column("sy").to_pylist()
+    pair_n: dict[tuple[str, str], int] = collections.Counter()
+    where: dict[tuple[str, str], set[int]] = collections.defaultdict(set)
+
+    def account(i: int, sign: int) -> None:
+        sy = syms[i]
+        for pair in zip(sy, sy[1:]):
+            pair_n[pair] += sign * counts[i]
+            if sign > 0:
+                where[pair].add(i)
+            elif not pair_n[pair]:
+                del pair_n[pair]
+
+    for i in range(len(syms)):
+        account(i, 1)
     merges: list[tuple[int, str, str, str, int]] = []
     for step in range(1, n_merges + 1):
-        pair_rows = (
-            cur.filter(F.size("sy") >= 2)
-            .select(
-                "c",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(sy) - 1), i -> "
-                        "concat(element_at(sy, i), ' ', "
-                        "element_at(sy, i + 1)))"
-                    )
-                ).alias("pair"),
-            )
-            .groupBy("pair")
-            .agg(F.sum("c").alias("n"))
-            .orderBy(F.desc("n"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not pair_rows:
+        if not pair_n:
             break
-        pair, n = pair_rows[0].pair, pair_rows[0].n
-        lhs, rhs = pair.split(" ")
+        (lhs, rhs), n = min(
+            pair_n.items(), key=lambda kv: (-kv[1], f"{kv[0][0]} {kv[0][1]}")
+        )
         merged = lhs + rhs
         merges.append((step, lhs, rhs, merged, n))
-        l_lit, r_lit, m_lit = F.lit(lhs), F.lit(rhs), F.lit(merged)
-        folded = F.aggregate(
-            F.col("sy"),
-            F.array().cast("array<string>"),
-            lambda acc, x: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == l_lit)
-                & (x == r_lit),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1), F.array(m_lit)
-                ),
-            ).otherwise(F.concat(acc, F.array(x))),
-        )
-        cur = cur.select("wd", "c", folded.alias("sy")).localCheckpoint(
-            eager=False
-        )
-    return merges, cur
+        for i in where.pop((lhs, rhs)):
+            sy = syms[i]
+            if not any(a == lhs and b == rhs for a, b in zip(sy, sy[1:])):
+                continue
+            account(i, -1)
+            out: list[str] = []
+            for x in sy:
+                if out and out[-1] == lhs and x == rhs:
+                    out[-1] = merged
+                else:
+                    out.append(x)
+            syms[i] = out
+            account(i, 1)
+    return merges, {w: len(sy) for w, sy in zip(vocab_words, syms)}
 
 
 def bpe_apply(
@@ -1633,9 +1630,9 @@ def bpe_apply(
     symbolization joins back on the word key, and the result is a
     |sources|-row aggregate.  Nothing after the first hash-agg exceeds
     vocabulary × sources rows at any corpus scale."""
-    # parallelism floor for deficient scans (no-op at scale; r14
-    # optimization round — see dedup.spread_scan): tokenize/explode
-    # and the map-side partial aggregates run cluster-parallel
+    # parallelism floor for deficient scans (no-op at scale; see
+    # dedup.spread_scan): tokenize/explode and the map-side partial
+    # aggregates run cluster-parallel
     df = spread_scan(df, text_col)
     from tmp_parquet_merge_spark.operators.dedup import words
 
@@ -1650,8 +1647,15 @@ def bpe_apply(
         .localCheckpoint(eager=False)
     )
     vocab = sw.groupBy("wd").agg(F.sum("cnt").alias("c"))
-    _, fitted = _bpe_loop(vocab, n_merges)
-    tok = fitted.select("wd", F.size("sy").cast("long").alias("n_sym"))
+    _, n_sym = _bpe_loop(vocab, n_merges)
+    tok = df.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "wd": pa.array(list(n_sym), pa.string()),
+                "n_sym": pa.array(list(n_sym.values()), pa.int64()),
+            }
+        )
+    )
     return (
         sw.join(tok, "wd")
         .groupBy("source")

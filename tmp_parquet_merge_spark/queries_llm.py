@@ -909,9 +909,10 @@ def q_ann_lsh(spark, sf_dir):
 
 @query("q_kmeans")
 def q_kmeans(spark, sf_dir):
-    """Lloyd's k-means (k=8) over the embeddings: broadcast centroids,
-    Arrow-matmul assignment, map-side-combined centroid update —
-    the iterative fit behind a real IVF index.  Rows-only (iterative
+    """Lloyd's k-means (k=8) over the embeddings: one shuffle-free job
+    per round (Arrow-matmul assignment and per-partition centroid
+    sums, added on the driver) — the iterative fit behind a real IVF
+    index.  Rows-only (iterative
     floating-point fit isn't SQL-expressible), but the output carries
     fit metadata (n_iter / final_shift / converged) so the rows-only
     check sees convergence, not just opaque labels."""
@@ -2527,18 +2528,17 @@ def q_bpe_apply(spark, sf_dir):
 
 @query("q_bpe_train", oracle=_bpe_train_oracle(8))
 def q_bpe_train(spark, sf_dir):
-    """Multi-round BPE tokenizer training (r13 verdict #4): 8 fixed
-    merge rounds over the documents corpus — the iterative form of
-    q_bpe_merge's single step, completing the tokenizer family
-    (fertility / perplexity / vocab / single-merge already exist).
-    Returns the merge table itself (step, lhs, rhs, merged, n); at
-    sf0.001 round 8 already merges a multi-character symbol
-    ('p' + 'ar'), so the iteration is structurally exercised at every
-    tier.  Scale: one corpus scan reduces to the word histogram;
-    every round after is vocabulary-sized with a 1-row argmax collect
-    (operators/text.py::bpe_train — the q_pagerank loop discipline).
-    Reference surface: wesm/tmp-parquet-merge has no tokenizer; this
-    extends the mandated LLM-pipeline family."""
+    """Multi-round BPE tokenizer training: 8 fixed merge rounds over
+    the documents corpus — the iterative form of q_bpe_merge's single
+    step, completing the tokenizer family (fertility / perplexity /
+    vocab / single-merge already exist).  Returns the merge table
+    itself (step, lhs, rhs, merged, n); at sf0.001 round 8 already
+    merges a multi-character symbol ('p' + 'ar'), so the iteration is
+    structurally exercised at every tier.  Scale: one corpus scan
+    reduces to the word histogram, which the driver holds while the
+    rounds run (operators/text.py::bpe_train).  Reference surface:
+    wesm/tmp-parquet-merge has no tokenizer; this extends the mandated
+    LLM-pipeline family."""
     return text.bpe_train(t(spark, sf_dir, "documents"), "text", n_merges=8)
 
 

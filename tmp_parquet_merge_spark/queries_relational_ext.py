@@ -119,17 +119,18 @@ def _exact_group_percentiles(
     """Exact per-group interpolated percentiles computed WITHOUT a
     per-group total sort — the distributed order-statistics selection
     that keeps a 3-distinct-value group key from capping the stage at
-    3 tasks (r14 verdict "Next round" #6; guide §2.2/§2.5 skew: a
-    single giant key's sort cannot be split, so don't sort — select).
+    3 tasks (a single giant key's sort cannot be split, so don't sort
+    — select).
 
-    Three parallel passes replace ``F.percentile``'s per-group
-    sort-aggregate:
+    Three scans of the value relation replace ``F.percentile``'s
+    per-group sort-aggregate:
 
-    1. per-group (count, min, max) — a map-side-combined hash-agg;
+    1. per-group (min, max) — a map-side-combined hash-agg, broadcast
+       back onto every row;
     2. a ``n_buckets``-bin histogram over equal-width value buckets
        (monotone ``floor((v - min)/step)``, so bucket order = value
        order) — map-side-combined, shuffle bounded by
-       |groups| × n_buckets;
+       |groups| × n_buckets, whose sum is the group size n;
     3. the cumulative histogram locates, per (group, percentile), the
        bucket(s) holding sorted positions floor(p·(n−1)) and
        ceil(p·(n−1)); only THOSE buckets' rows (~2·n/n_buckets per
@@ -148,26 +149,26 @@ def _exact_group_percentiles(
     boundaries back-to-back), so the window's local rank + the
     cumulative offset IS the global rank.
 
-    Returns one row per group: ``group_col``, then one ``p<pct>``
-    double column per requested percentile.
+    Returns one row per group, like ``F.percentile``: a NULL group key
+    is a group (every join on the key is null-safe), and a group whose values are
+    all NULL gets NULL percentiles.  Columns: ``group_col``, then one
+    ``p<pct>`` double column per requested percentile.
     """
     from pyspark.sql import Window
 
-    v = F.col(val_col).cast("double")
     rows = df.select(
-        F.col(group_col).alias("__g"), v.alias("__v")
-    ).filter(F.col("__v").isNotNull())
-    # NO spread_scan here (measured r15): a keyless round-robin spread
-    # of the 600k-row value relation cost MORE than the single-task
-    # map passes it parallelized (warm 2.8 -> 3.9 s — the repartition
-    # pays sortBeforeRepartition plus a corpus exchange per consumer
+        F.col(group_col).alias("__g"), F.col(val_col).cast("double").alias("__v")
+    )
+    # NO spread_scan here (measured): a keyless round-robin spread of
+    # the 600k-row value relation cost MORE than the single-task map
+    # passes it parallelized (warm 2.8 -> 3.9 s — the repartition pays
+    # sortBeforeRepartition plus a corpus exchange per consumer
     # branch).  The passes are already map-side-combined hash-aggs, so
     # at scale the scan's native splits parallelize them.
     stats = rows.groupBy("__g").agg(
-        F.count(F.lit(1)).alias("__n"),
         F.min("__v").alias("__vmin"),
         F.max("__v").alias("__vmax"),
-    )
+    ).withColumnRenamed("__g", "__sg")
     step = (F.col("__vmax") - F.col("__vmin")) / F.lit(float(n_buckets))
     bucket = (
         F.when(
@@ -180,36 +181,49 @@ def _exact_group_percentiles(
         .otherwise(F.lit(0))
         .cast("int")
     )
-    hb = rows.join(F.broadcast(stats), "__g").select(
-        "__g", "__v", bucket.alias("__b")
+    # both consumers of hb (histogram, candidate re-read) need the same
+    # stats columns, so the stats scan is planned once and reused
+    hb = (
+        rows.filter(F.col("__v").isNotNull())
+        .join(F.broadcast(stats), F.col("__g").eqNullSafe(F.col("__sg")))
+        .select("__g", "__v", bucket.alias("__b"))
     )
     hist = hb.groupBy("__g", "__b").agg(F.count(F.lit(1)).alias("__c"))
     wcum = Window.partitionBy("__g").orderBy("__b")
-    cum = hist.select(
+    hist = hist.select(
         "__g",
         "__b",
         "__c",
         (F.sum("__c").over(wcum) - F.col("__c")).alias("__before"),
+        F.sum("__c").over(Window.partitionBy("__g")).alias("__n"),
     )
-    # per (group, percentile): Spark's Percentile positions — pos =
+    # per (bucket, percentile): Spark's Percentile positions — pos =
     # p·(n−1) in double, lower = floor, higher = ceil
-    tg = stats.select(
-        "__g",
-        "__n",
-        F.explode(F.array(*[F.lit(float(p)) for p in pcts])).alias("__p"),
-    )
     pos = F.col("__p") * (F.col("__n") - 1).cast("double")
-    tg = tg.select(
-        "__g",
-        "__p",
-        pos.alias("__pos"),
-        F.floor(pos).cast("long").alias("__lo"),
-        F.ceil(pos).cast("long").alias("__hi"),
+    cum = (
+        hist.select(
+            "__g",
+            "__b",
+            "__c",
+            "__before",
+            F.explode(F.array(*[F.lit(float(p)) for p in pcts])).alias("__p"),
+            "__n",
+        )
+        .select(
+            "__g",
+            "__b",
+            "__c",
+            "__before",
+            "__p",
+            pos.alias("__pos"),
+            F.floor(pos).cast("long").alias("__lo"),
+            F.ceil(pos).cast("long").alias("__hi"),
+        )
     )
     in_bucket = lambda r: (F.col("__before") <= r) & (  # noqa: E731
         r < F.col("__before") + F.col("__c")
     )
-    blo = tg.join(cum, "__g").filter(in_bucket(F.col("__lo"))).select(
+    blo = cum.filter(in_bucket(F.col("__lo"))).select(
         "__g",
         "__p",
         "__pos",
@@ -218,15 +232,16 @@ def _exact_group_percentiles(
         F.col("__b").alias("__b_lo"),
         F.col("__before").alias("__off"),
     )
-    bhi = (
-        tg.join(cum, "__g")
-        .filter(in_bucket(F.col("__hi")))
-        .select("__g", "__p", F.col("__b").alias("__b_hi"))
+    bhi = cum.filter(in_bucket(F.col("__hi"))).select(
+        "__g", "__p", F.col("__b").alias("__b_hi")
     )
-    sel = blo.join(bhi, ["__g", "__p"])
+    sel = blo.join(
+        bhi.withColumnRenamed("__g", "__hg").withColumnRenamed("__p", "__hp"),
+        F.col("__g").eqNullSafe(F.col("__hg")) & (F.col("__p") == F.col("__hp")),
+    ).drop("__hg", "__hp")
     cand = hb.join(
         F.broadcast(sel.withColumnRenamed("__g", "__sg")),
-        (F.col("__g") == F.col("__sg"))
+        F.col("__g").eqNullSafe(F.col("__sg"))
         & ((F.col("__b") == F.col("__b_lo")) | (F.col("__b") == F.col("__b_hi"))),
     )
     wr = Window.partitionBy("__g", "__p").orderBy("__v")
@@ -256,7 +271,16 @@ def _exact_group_percentiles(
         # F.col would parse the dot as struct access
         F.col(f"`{float(p)}`").alias(name) for p, name in zip(pcts, names)
     ]
-    return out.select(*renames)
+    # a group with no non-NULL value has neither a min nor a max;
+    # filtering on both keeps this read of stats identical to the
+    # broadcast one, so its exchange is reused, not re-scanned
+    no_values = stats.filter(
+        F.col("__vmin").isNull() & F.col("__vmax").isNull()
+    ).select(
+        F.col("__sg").alias(group_col),
+        *[F.lit(None).cast("double").alias(name) for name in names],
+    )
+    return out.select(*renames).unionByName(no_values)
 
 
 @query("q_agg_sketch")
@@ -1855,9 +1879,7 @@ def _pagerank_oracle(n_iter: int) -> str:
 def q_pagerank(spark, sf_dir):
     """PageRank over the part co-purchase graph (parts linked when
     they share an order, symmetrized): the canonical iterative
-    join-aggregate, 10 damped rounds — the same loop discipline
-    (persisted pre-partitioned edges, scalar-only driver traffic) as
-    k-means and connected components.  Oracle (r7): a fixed 10-round
+    join-aggregate, 10 damped rounds.  Oracle: a fixed 10-round
     unrolled CTE chain — the registered query pins ``tol=0`` so the
     round count is closed-form at every sf (the L1 early exit stays
     exercised in tests/test_graph.py); ranks round to 6 decimals on
@@ -1873,23 +1895,15 @@ def q_pagerank(spark, sf_dir):
     ).distinct()
     edges = graph.symmetrize(pairs, "a", "b")
     # tol=0: all 10 rounds always run, so the unrolled oracle's round
-    # count holds at every sf (and no per-check scalar reads at all —
-    # strictly fewer driver round-trips than the tol>0 spelling); a
-    # symmetrized graph also skips the dangling branch entirely
-    # (probed once); checkpoint_every=2 batches two join-aggregate
-    # rounds per eager job (per-job scheduling overhead dominates on
-    # a 20k-node state).  num_partitions pins the loop's node-hash
-    # layout: 2.4M edges / 20k nodes at sf0.1 fit 8 partitions
-    # comfortably; on a cluster this scales with edge bytes
-    # (~128 MB/partition), not a constant.
-    # symmetric=True: the edges come from symmetrize(), so the node
-    # set is the out-degree key set — the nodes union+distinct pass,
-    # the degree left-join and the dangling probe all drop out (r14
-    # optimization round; results identical by construction).  The
-    # small-state broadcast gate then removes both per-round state
-    # exchanges at bench scale while the >100k-node path keeps the
-    # pre-partitioned sort-merge loop — see graph.pagerank's docstring
-    # and OPTIMIZATION_r14.md for the measured A/B.
+    # count holds at every sf.  Up to the default edge gate (2.4M
+    # directed edges at sf0.1) the edge list is collected once and the
+    # rounds run on the driver; larger graphs (the 25x replica's ~60M
+    # edges) take the persisted sort-merge loop, where
+    # checkpoint_every=2 batches two rounds per eager job and
+    # num_partitions=8 pins the node-hash layout (on a cluster this
+    # scales with edge bytes, ~128 MB/partition).  symmetric=True: the
+    # edges come from symmetrize(), so that loop's node set is the
+    # out-degree key set.
     return graph.pagerank(
         edges,
         damping=0.85,
